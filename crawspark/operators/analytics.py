@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -412,10 +413,9 @@ def heavy_hitters_users(spark, sf_dir):
     keyed = ev.select(
         F.when(F.col("event_id") % 3 < 2, 777777)
         .otherwise(F.col("user_id")).cast("long").alias("hot_key"))
-    # repartition: a single-file scan would make MG a single-partition
+    # widened: a one-partition input would make MG a single-summary
     # exact pass (still correct, but the multi-summary union is the point)
-    keyed = keyed.repartition(spark.sparkContext.defaultParallelism)
-    return heavy_hitters(keyed, "hot_key", 20)
+    return heavy_hitters(ensure_parallelism(keyed), "hot_key", 20)
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crawspark.operators.dedup import _DDB_TOK_CTES, dedup_minhash_resolve
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -80,8 +81,6 @@ DUP_SENT_MAX = 0.3
           / greatest(length(d.text), 1) BETWEEN {SPACE_LO} AND {SPACE_HI}
 """)
 def curate_corpus(spark, sf_dir):
-    from crawspark.operators.partitioning import ensure_parallelism
-
     docs = ensure_parallelism(read_testdata(spark, sf_dir, "documents"))
     # 1. exact dedup on the normalized-text fingerprint (window keeper —
     #    same shape as window_dedup_first; shuffle key is a 32-byte md5).

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -75,8 +76,7 @@ def dedup_exact(spark, sf_dir):
 def shingle_rows_capped(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) with distinct word-3-gram shingles, hot shingles
     (df > DF_CAP) dropped. The explode output is the inverted index."""
-    spark = docs.sparkSession
-    docs = (docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = (ensure_parallelism(docs)
             .withColumn("toks", F.expr(_TOKS))
             .filter(F.size("toks") >= 3)
             .withColumn("shingles", F.expr(_SHINGLES))
@@ -107,8 +107,7 @@ def capped_shingle_arrays(docs: DataFrame) -> DataFrame:
     posting rows). The base arrays are checkpointed: the hot aggregate
     and the except pass both consume them, and the tokenize+shingle
     HOFs are the dominant CPU."""
-    spark = docs.sparkSession
-    base = (docs.repartition(spark.sparkContext.defaultParallelism)
+    base = (ensure_parallelism(docs)
             .withColumn("toks", F.expr(_TOKS))
             .filter(F.size("toks") >= 3)
             .withColumn("shs", F.expr(_SHINGLES))
@@ -217,8 +216,7 @@ def minhash_signatures(df: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     the distinct set equals min over the raw multiset, so signatures are
     bit-identical to the row-aggregation form (same xxhash64(h, i)
     chain; pinned by tests/test_recall.py's recall floors)."""
-    spark = df.sparkSession
-    base = (df.repartition(spark.sparkContext.defaultParallelism)
+    base = (ensure_parallelism(df)
             .withColumn("toks", F.expr(_TOKS))
             .filter(F.size("toks") >= 3)
             .withColumn("hs", F.expr(
@@ -596,14 +594,10 @@ def substr_windows(docs: DataFrame) -> DataFrame:
     """(doc_id, w): distinct SUBSTR_L-token window md5s per doc — the
     ONE window-table definition shared by dedup_exact_substring (pair
     join) and curate_corpus_v2's drop-list derivation (min-doc-per-
-    window; needs no pair join). Repartitioned first — the same
-    single-file-scan hazard as capped_shingle_arrays: without it the
-    12-gram HOF + md5 map ran on the scan's 2 partitions (r6 measured
-    the v2 drop pass at 11.0s vs 2.3s repartitioned at sf1.0)."""
+    window; needs no pair join)."""
     from crawspark.functions.ngrams import ngram_expr
 
-    sc = docs.sparkSession.sparkContext
-    return (docs.repartition(sc.defaultParallelism)
+    return (ensure_parallelism(docs)
             .withColumn("toks", F.expr(_TOKS))
             .filter(F.size("toks") >= SUBSTR_L)
             .withColumn(
@@ -968,15 +962,12 @@ def _winnow_fp(aug):
     sort — then a distinct (another exchange; per-doc array_distinct is
     equivalent because doc_id is part of the key). Equivalence with the
     window form is pinned by tests/test_winnowing.py's textbook
-    reference. The input is repartitioned first — same hazard as
-    capped_shingle_arrays: a small single-file parquet scan yields ONE
-    partition, serializing the CPU-heavy gram+md5 map onto one core."""
-    sc = aug.sparkSession.sparkContext
+    reference."""
     sel = (f"array_distinct(transform("
            f"  filter(sequence(0, size(hs) - 1),"
            f"         j -> {_winnow_array_pred('j')}),"
            f"  j -> element_at(hs, j + 1)))")
-    return (aug.repartition(sc.defaultParallelism)
+    return (ensure_parallelism(aug)
             .selectExpr("doc_id", f"{_TOKS} AS toks")
             .filter(F.expr(f"size(toks) >= {WINNOW_K}"))
             .select("doc_id", F.explode(F.array(F.expr(

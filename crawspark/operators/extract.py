@@ -25,6 +25,7 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.oracle.extract import extract_document
 
 TARGET_BATCH_BYTES = 64 << 20  # re-chunk threshold (~64 MB of payload)
@@ -143,17 +144,10 @@ def _interleave_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBa
 
 def interleave_documents(df: DataFrame) -> DataFrame:
     """Driver `documents` table → documents_interleaved, deterministically
-    (pure function of each row — no data shipped to executors).
-
-    A small single-file parquet scan yields ONE partition, which would
-    serialize the whole CPU-bound interleave+extract chain onto one core
-    (measured 3.98 s → 0.5 s at sf0.1 / local[32]). Repartition only when
-    the scan is narrower than the cluster — at 100 TB the scan already
-    carries more partitions than cores and no shuffle is added."""
-    sc = df.sparkSession.sparkContext
-    cols = df.select("doc_id", "text", "lang")
-    if cols.rdd.getNumPartitions() < sc.defaultParallelism:
-        cols = cols.repartition(sc.defaultParallelism)
+    (pure function of each row — no data shipped to executors). Widening
+    a one-partition scan first measured 3.98 s → 0.5 s at sf0.1 /
+    local[32]."""
+    cols = ensure_parallelism(df.select("doc_id", "text", "lang"))
     from crawspark.schema import DOCUMENTS_INTERLEAVED
     return cols.mapInArrow(_interleave_arrow, DOCUMENTS_INTERLEAVED)
 
@@ -177,10 +171,7 @@ def interleave_and_extract(df: DataFrame) -> DataFrame:
     so every oracle hash is unchanged; the two-stage form stays for
     callers that consume the interleaved table itself (classify_spans'
     raw-chars branch, the worker-native job's input snapshot)."""
-    sc = df.sparkSession.sparkContext
-    cols = df.select("doc_id", "text", "lang")
-    if cols.rdd.getNumPartitions() < sc.defaultParallelism:
-        cols = cols.repartition(sc.defaultParallelism)
+    cols = ensure_parallelism(df.select("doc_id", "text", "lang"))
     from crawspark.schema import EXTRACTED_SPANS
     return cols.mapInArrow(_interleave_extract_arrow, EXTRACTED_SPANS)
 

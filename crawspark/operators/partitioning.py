@@ -107,7 +107,19 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     1-2 cores (r6: the sf1.0 documents table is one 50k-row row group;
     the curate_v2 window pass measured 11.0s vs 2.3s repartitioned).
     Guarded: inputs that already scan wide — the production case at
-    100 TB — pass through untouched, so no exchange is added at scale."""
+    100 TB — pass through untouched, so no exchange is added at scale.
+
+    This is the ONLY widening decision in the package; callers put the
+    call exactly where their pre-exchange per-row CPU starts.
+
+    Precondition: ``df`` is a scan, or a narrow or union frame over
+    scans, with no exchange. The ``df.rdd`` partition probe builds the
+    physical plan; under AQE that runs any shuffle stages below it
+    eagerly (a ``groupBy`` input ran one job just to answer the probe).
+    Reading the count from ``queryExecution().executedPlan().execute()``
+    instead was measured (100-doc slice, local[4], 30 interleaved reps):
+    40 ms median vs 47 ms for ``df.rdd`` with overlapping IQRs
+    (28.6-57.4 vs 38.3-67.5 ms) — not worth py4j plan-walking."""
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)

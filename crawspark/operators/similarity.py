@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -167,14 +168,11 @@ def ann_cosine_topk(spark, sf_dir):
     # Brute-force cosine top-k for 5 query vectors: broadcast the tiny query
     # side, scan the corpus once, per-query window top-k. Rounded-sim
     # ordering + vec_id tie-break keeps ranking engine-stable.
-    from crawspark.operators.partitioning import ensure_parallelism
-
     emb = read_testdata(spark, sf_dir, "embeddings").withColumn(
         "norm", F.expr(f"sqrt({_DOT.format(a='embedding', b='embedding')})"))
     q = emb.filter(F.col("vec_id") < 5).alias("q")
     # r6: the corpus side computes every per-pair dot product after the
-    # broadcast join — on the embeddings table's ONE row group that all
-    # ran on one core (see ensure_parallelism).
+    # broadcast join, so it is the side that gets widened.
     n = ensure_parallelism(emb).alias("n")
     dot = F.expr(_DOT.format(a="q.embedding", b="n.embedding"))
     sim = F.round(dot / (F.col("q.norm") * F.col("n.norm")), 6)

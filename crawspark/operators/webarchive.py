@@ -22,6 +22,7 @@ import hashlib
 import pandas as pd
 from pyspark.sql import functions as F
 
+from crawspark.operators.partitioning import ensure_parallelism
 from crawspark.registry import register
 from crawspark.sources import read_testdata
 
@@ -179,11 +180,8 @@ def extract_from_warc(spark, sf_dir):
         for rows in _chunk_docs(docs, TARGET_BATCH_BYTES):
             yield _extract_rows(rows)
 
-    df = read_testdata(spark, sf_dir, "documents")
-    sc = df.sparkSession.sparkContext
-    cols = df.select("doc_id", "text", "lang")
-    if cols.rdd.getNumPartitions() < sc.defaultParallelism:
-        cols = cols.repartition(sc.defaultParallelism)
+    cols = ensure_parallelism(read_testdata(spark, sf_dir, "documents")
+                              .select("doc_id", "text", "lang"))
     from crawspark.operators.extraction_queries import SPAN_CANON_EXPR
     ext = cols.mapInArrow(_warc_extract_arrow, EXTRACTED_SPANS)
     return ext.select("doc_id",

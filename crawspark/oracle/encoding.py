@@ -67,7 +67,9 @@ def _try_strict(data: bytes, charset: str) -> str | None:
 
 
 def decode_bytes(data: bytes, declared_charset: str = "") -> str:
-    """Decode a raw payload to text via the 5-step chain above."""
+    """Decode a raw payload to text via the 5-step chain above, with a
+    strict UTF-8 probe ahead of step 4: a legacy payload (e.g. cp1252)
+    that also validates as UTF-8 decodes as UTF-8."""
     if not data:
         return ""
     for bom, charset in _BOMS:
@@ -92,7 +94,7 @@ def decode_bytes(data: bytes, declared_charset: str = "") -> str:
     # other encoding, so detection could only confirm (at ~1.3 ms/doc,
     # the dominant cost of the decode chain measured at sf1.0) or
     # misfire. Skipping it is both faster and strictly safer.
-    if declared != "utf-8":  # step 3 already proved a utf-8 decl fails
+    if "utf-8" not in (meta, declared):  # steps 2/3 already tried utf-8
         got = _try_strict(data, "utf-8")
         if got is not None:
             return got

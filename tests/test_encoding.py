@@ -194,3 +194,29 @@ def test_extract_document_html_b64_equals_predecoded():
         assert got["spans"] == plain["spans"], f"mismatch for {enc}"
         assert got["lang"] == plain["lang"]
     assert plain["n_spans"] >= 2  # sanity: the page actually extracted
+
+
+def test_meta_utf8_over_latin1_skips_redundant_probe(monkeypatch):
+    # <meta> claims utf-8 over latin-1 bytes: step 2 already failed the
+    # strict utf-8 decode, so the probe before detection is skipped and
+    # detection recovers the page unchanged.
+    from crawspark.oracle import encoding
+
+    html = ('<html><head><meta charset="utf-8"></head><body><p>'
+            'the market report was ready ' + ACCENTED + '</p></body></html>')
+    data = html.encode("latin-1")
+    assert sniff_meta_charset(data) == "utf-8"
+    tried = []
+    strict = encoding._try_strict
+    monkeypatch.setattr(encoding, "_try_strict",
+                        lambda d, cs: tried.append(cs) or strict(d, cs))
+    assert decode_bytes(data) == html
+    assert tried == ["utf-8"]
+
+
+def test_cp1252_bytes_valid_as_utf8_decode_as_utf8():
+    # Documented trade-off of the strict utf-8 probe: the cp1252 pair
+    # "Ã©" is byte-for-byte the utf-8 encoding of "é".
+    data = "caf\xc3\xa9".encode("cp1252")
+    assert data == b"caf\xc3\xa9"
+    assert decode_bytes(data) == "caf\xe9"

@@ -89,6 +89,37 @@ def test_window_dedup_first_plan_has_no_window(spark):
     assert "max_by" in plan, plan[:1200]
 
 
+def test_window_dedup_first_long_min_tie_break(spark, tmp_path):
+    # The max_by tie-break must not negate event_id: under ANSI mode
+    # -Long.MIN_VALUE overflows. A Long.MIN_VALUE row tying on ts must
+    # win exactly as in the ORDER BY ts DESC, event_id row_number form.
+    from pyspark.sql.window import Window
+
+    from crawspark.registry import load_all
+
+    lo = -(1 << 63)
+    rows = [(lo, 1, "min"), (5, 1, "five"), (lo + 1, 1, "older"),
+            (7, 2, "seven"), (3, 2, "three"), (9, 3, "only")]
+    ev = (spark.createDataFrame(
+            rows, "event_id long, user_id long, event_type string")
+          .withColumn("ts", F.when(F.col("event_type") == "older",
+                                   F.lit("2024-01-01 00:00:00"))
+                      .otherwise(F.lit("2024-01-02 00:00:00"))
+                      .cast("timestamp")))
+    ev.write.parquet(str(tmp_path / "events.parquet"))
+
+    got = {tuple(r) for r in
+           load_all()["window_dedup_first"].spark(spark, str(tmp_path))
+           .collect()}
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), "event_id")
+    want = {tuple(r) for r in
+            ev.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("user_id", "event_id", "event_type").collect()}
+    assert got == want
+    assert (1, lo, "min") in got
+
+
 def test_winnowing_fp_plan_is_map_only(spark):
     # The array-side selection removed the lag/lead Window and the
     # distinct: the fingerprint pass must plan no Window and no
